@@ -39,7 +39,7 @@ def main():
             con.execute(f"CREATE VIEW {name[:-8]} AS SELECT * FROM "
                         f"'{os.path.join(data, name)}'")
     ops = [{"id": i, "pass": 0, "kind": k, "name": n} for i, (k, n) in enumerate(bench.QUERIES)]
-    args = SimpleNamespace(workload="queries", seconds=0, trace=0)
+    args = SimpleNamespace(workload="queries", trace=0)
     res, _, _ = bench.run_jvm(cp, args, ops, data, "derive-queries")
     out, mismatches = {}, []
     for o in res["ops"]:

@@ -28,7 +28,7 @@ def main():
     ops = [{"id": i, "pass": 0, "kind": k, "name": n} for i, (k, n) in enumerate(
         [("sql", "q01_agg_filter"), ("sql", "q05_multi_join"),
          ("run", "q168_shared_spans"), ("run", "q171_bpe_train")])]
-    args = SimpleNamespace(workload="queries", seconds=0, trace=1)
+    args = SimpleNamespace(workload="queries", trace=1)
     res, spans, _ = bench.run_jvm(cp, args, ops, data, "selftest-counters")
     per_op = {int(k): v for k, v in res["per_op"].items()}
     names = {s["id"]: s for s in spans}
@@ -54,10 +54,10 @@ def main():
         ("every op planned and ran jobs",
          all(per_op[i]["jobs"] > 0 and per_op[i]["planningMs"] >= 0 for i in range(4))),
     ]
-    args = SimpleNamespace(workload="acid_txn", seconds=0, trace=1)
-    aops = bench.make_ops("acid_txn", 1)
+    args = SimpleNamespace(workload="acid_txn", trace=1)
+    aops = bench.make_ops("acid_txn", 1, 1)
     ares, aspans, _ = bench.run_jvm(cp, args, aops, data, "selftest-acid")
-    layers = bench.per_layer(ares, aspans, bench.nproc())
+    layers = bench.per_layer(ares, aspans)
     checks += [("acid_txn acid.compactions > 0", layers["acid.compactions"] > 0),
                ("acid_txn acid.snapshot_s > 0", layers["acid.snapshot_s"] > 0),
                ("acid_txn operators.build_s == 0", layers["operators.build_s"] == 0)]

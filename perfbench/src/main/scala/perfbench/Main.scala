@@ -13,19 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{Acid, GraftSession, Queries, Tables, Warehouse}
 
 /** Benchmark harness. Runs one workload's op list (generated from the
-  * workload seed by run.py) single-client and closed-loop: whole passes
-  * over the list until the time budget is spent, so every run sees the
-  * same mix of ops. Each op's result is fingerprinted (row count plus
-  * bit_xor of xxhash64 over every column, in column-name order) for
-  * run.py to check. With tracing on, spans and Spark listener counters are
-  * recorded as well.
+  * workload seed by run.py) single-client and closed-loop: every pass in
+  * the list, so every run of a workload does the same work. Each op's
+  * result is fingerprinted (row count plus bit_xor of xxhash64 over every
+  * column, in column-name order) for run.py to check. With tracing on,
+  * spans and Spark listener counters are recorded as well.
   *
   * Usage: Main --workload W --plan FILE --data DIR --work DIR --out DIR
-  *             --seconds S --trace 0|1 --cores N --setups K
+  *             --trace 0|1
   */
 object Main {
   private val json = new ObjectMapper()
-  /** A small scan + sort + limit query run once per set-up. */
+  /** A small scan + sort + limit query run once in set-up. */
   private val WarmUp = "q15_orderby_limit"
 
   final case class OpResult(id: Long, pass: Int, kind: String, name: String,
@@ -45,55 +44,42 @@ object Main {
     val dataDir = opt("data")
     val workDir = new File(opt("work")).getAbsoluteFile
     val outDir = new File(opt("out")); outDir.mkdirs()
-    val seconds = opt("seconds").toDouble
     val traced = opt("trace") == "1"
-    val cores = opt("cores").toInt
-    val setups = opt.getOrElse("setups", "3").toInt
+    val cores = Runtime.getRuntime.availableProcessors
     val passes: Seq[Seq[JsonNode]] = Files.readAllLines(Paths.get(opt("plan"))).asScala
       .filter(_.trim.nonEmpty).map(l => json.readTree(l)).toSeq
       .groupBy(_.get("pass").asInt).toSeq.sortBy(_._1).map(_._2)
 
-    // ---- set-up: session, then `setups` × (fresh session state,
-    // table registration, warm-up op); the median of those is reported
+    // ---- set-up, JVM start to the first timed op: session, table
+    // registration, warm-up queries and, for acid_txn, the table load
     val jvmStartUs = ManagementFactory.getRuntimeMXBean.getStartTime * 1000L
-    val base = GraftSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", new File(workDir, "spark-local").toString)
       .config("spark.sql.warehouse.dir", new File(workDir, "warehouse").toString)
       .getOrCreate()
-    base.sparkContext.setLogLevel("ERROR")
-    val sessionUs = Clock.us() - jvmStartUs
-    var spark: SparkSession = base
-    val registerUs = mutable.ArrayBuffer[Long]()
-    val setupUs = mutable.ArrayBuffer[Long]()
-    for (_ <- 0 until math.max(1, setups)) {
-      val t0 = Clock.us()
-      spark = base.newSession()
-      Tables.register(spark, dataDir)
-      val t1 = Clock.us()
-      fingerprint(GraftSession.sql(spark, Queries.byName(WarmUp).oracle.get))
-      registerUs += t1 - t0
-      setupUs += Clock.us() - t0
-    }
+    spark.sparkContext.setLogLevel("ERROR")
+    val regT0 = Clock.us()
+    Tables.register(spark, dataDir)
+    val registerUs = Clock.us() - regT0
+    fingerprint(GraftSession.sql(spark, Queries.byName(WarmUp).oracle.get))
     val acidPath = new File(workDir, "acid_orders").getAbsolutePath
-    val prepT0 = Clock.us()
     // Queries outside every pass that load the join, aggregate and window
-    // code paths, so the first timed query does not pay their start-up.
+    // code paths, so the first timed op does not pay their start-up.
     Seq("q04_join_left_outer", "q24_window_running").foreach { n =>
       fingerprint(GraftSession.sql(spark, Queries.byName(n).oracle.get))
     }
-    // The first pass's operator queries once, untimed: an operator's first
-    // run in a JVM costs up to twice a warm one, and that start-up cost
-    // would land on whichever op the seed puts first.
+    // Every query of the first pass once, untimed: a query's first run in
+    // a JVM costs up to twice a warm one (JIT, generated code), and that
+    // start-up cost would land on whichever ops the seed puts first.
     val warm = new Work(spark, dataDir, acidPath, None)
-    passes.head.filter(_.get("kind").asText == "run").foreach { op =>
+    passes.head.filter(op => Set("sql", "run")(op.get("kind").asText)).foreach { op =>
       try warm.run(op)
       catch { case e: Throwable => System.err.println(s"warm-up op failed: ${e.getMessage}") }
     }
     if (workload == "acid_txn") acidPrepare(spark, dataDir, acidPath)
-    val prepUs = Clock.us() - prepT0
 
     val tracer = if (traced) {
       val t = new Tracer(spark.sparkContext)
@@ -103,14 +89,14 @@ object Main {
     } else None
     val work = new Work(spark, dataDir, acidPath, tracer)
 
-    // ---- timed window: whole passes until `seconds` have elapsed
+    // ---- timed window: every pass of the plan
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     def gcMs(): Long = gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum
     val results = mutable.ArrayBuffer[OpResult]()
     val windowT0 = Clock.us()
-    var p = 0
-    while (p < passes.size && (p == 0 || Clock.us() - windowT0 < seconds * 1e6)) {
-      passes(p).foreach { op =>
+    val setupUs = windowT0 - jvmStartUs
+    for ((pass, p) <- passes.zipWithIndex) {
+      pass.foreach { op =>
         val id = op.get("id").asLong
         val kind = op.get("kind").asText
         val name = Option(op.get("name")).map(_.asText).getOrElse(kind)
@@ -135,7 +121,6 @@ object Main {
               String.valueOf(e.getMessage).take(500), g1 - g0)
         })
       }
-      p += 1
     }
     val windowUs = Clock.us() - windowT0
     // Heap still live once the ops are done: two full collections with a
@@ -166,8 +151,8 @@ object Main {
       writeSpans(new File(outDir, "spans.jsonl"), t.allSpans())
     }
     extra("retained_heap") = retainedHeap
-    writeResult(new File(outDir, "result.json"), workload, cores, sessionUs,
-      registerUs.toSeq, setupUs.toSeq, prepUs, windowUs, results.toSeq, extra)
+    writeResult(new File(outDir, "result.json"), workload, cores, setupUs,
+      registerUs, windowUs, results.toSeq, extra)
     spark.stop()
   }
 
@@ -235,8 +220,8 @@ object Main {
     case other => q(other.toString)
   }
 
-  private def writeResult(f: File, workload: String, cores: Int, sessionUs: Long,
-      registerUs: Seq[Long], setupUs: Seq[Long], prepUs: Long, windowUs: Long,
+  private def writeResult(f: File, workload: String, cores: Int, setupUs: Long,
+      registerUs: Long, windowUs: Long,
       ops: Seq[OpResult], extra: collection.Map[String, Any]): Unit = {
     val opsJson = ops.map { o =>
       toJson(mutable.LinkedHashMap[String, Any]("id" -> o.id, "pass" -> o.pass,
@@ -246,8 +231,8 @@ object Main {
         "gc_ms" -> o.gcMs))
     }
     val head = mutable.LinkedHashMap[String, Any]("workload" -> workload,
-      "cores" -> cores, "session_us" -> sessionUs, "register_us" -> registerUs,
-      "setup_us" -> setupUs, "prepare_us" -> prepUs, "window_us" -> windowUs,
+      "cores" -> cores, "setup_us" -> setupUs, "register_us" -> registerUs,
+      "window_us" -> windowUs,
       "spark" -> org.apache.spark.SPARK_VERSION,
       "jdk" -> System.getProperty("java.version"))
     val w = new PrintWriter(f, "UTF-8")
@@ -307,6 +292,16 @@ final class Work(spark: SparkSession, dataDir: String, acidPath: String,
       val df = acidTimed("snapshot")(Acid.snapshot(spark, acidPath))
       df.createOrReplaceTempView("acid_t")
       Some(span("fingerprint")(fingerprint(spark.sql(op.get("sql").asText))))
+    case "compact" =>
+      val compacting = existing()
+      val action = acidTimed("compact")(Acid.maybeCompact(spark, acidPath, minDeltas = 4))
+      if (action != "none") {
+        compactions += 1
+        rewritten += existing().filterNot(compacting.contains)
+          .map(f => Main.dirBytes(new File(acidPath, f))).sum
+      }
+      acidTimed("clean")(Acid.clean(acidPath))
+      None
     case kind =>
       val before = existing()
       acidTimed(kind)(kind match {
@@ -327,14 +322,6 @@ final class Work(spark: SparkSession, dataDir: String, acidPath: String,
         txnBytes += added.map(f => Main.dirBytes(new File(acidPath, f))).sum
         eventRows += added.map(f => parquetRows(new File(acidPath, f))).sum
       }
-      val compacting = existing()
-      val action = acidTimed("compact")(Acid.maybeCompact(spark, acidPath, minDeltas = 4))
-      if (action != "none") {
-        compactions += 1
-        rewritten += existing().filterNot(compacting.contains)
-          .map(f => Main.dirBytes(new File(acidPath, f))).sum
-      }
-      acidTimed("clean")(Acid.clean(acidPath))
       None
   }
 
