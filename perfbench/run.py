@@ -85,9 +85,10 @@ ACID_READ = ("SELECT count(*) AS n, sum(o_orderkey) AS key_sum, "
              "cast(sum(cast(o_totalprice AS decimal(18,2))) AS double) AS price_sum, "
              "sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS filled, "
              "max(o_orderdate) AS last_date FROM acid_t")
-# Seconds one pass takes on 4 cores at sf0.1 (queries 18-22 s, acid_txn
-# 10-12 s measured), which turn --seconds into a fixed number of passes.
-NOMINAL_PASS_S = {"queries": 20, "acid_txn": 11}
+# Seconds one warm pass takes on 4 cores at sf0.1 (queries 13-22 s after
+# the set-up's warm-up pass, acid_txn 9-13 s measured), which turn
+# --seconds into a fixed number of passes.
+NOMINAL_PASS_S = {"queries": 16, "acid_txn": 11}
 SCALE = 0.1  # corpus scale factor of every workload
 
 END_TO_END = [("setup_s", "s"), ("ops_per_s", "1/s"), ("op_p50_s", "s")]
